@@ -82,8 +82,9 @@ abstract class ClientPool[C](poolSize: Int) extends AutoCloseable {
 
 /** Hive metastore client pool (`hive2/Hive2ClientPool.java:27-83`):
   * clients are `RetryingMetaStoreClient` proxies over
-  * [[HiveMetaStoreClient]]; transport failures (and the MetaException
-  * wrapper HMS puts around them) trigger the pool's reconnect path. */
+  * [[HiveMetaStoreClient]]; transport failures, however the client
+  * wraps them, trigger the pool's reconnect path
+  * ([[HiveClientPool.isConnectionError]]). */
 class HiveClientPool(poolSize: Int, conf: Configuration)
     extends ClientPool[IMetaStoreClient](poolSize) {
 
@@ -103,8 +104,24 @@ class HiveClientPool(poolSize: Int, conf: Configuration)
   override protected def closeClient(client: IMetaStoreClient): Unit = client.close()
 
   override protected def isConnectionException(e: Exception): Boolean =
-    e.isInstanceOf[TTransportException] ||
-      (e.isInstanceOf[org.apache.hadoop.hive.metastore.api.MetaException] &&
-        e.getMessage != null &&
-        e.getMessage.contains("org.apache.thrift.transport.TTransportException"))
+    HiveClientPool.isConnectionError(e)
+}
+
+object HiveClientPool {
+  /** True when `e` or any of its causes is a broken connection: a
+    * `TTransportException`, a `java.net.SocketException` (broken pipe,
+    * connection reset, refused), or a thrift/HMS exception whose message
+    * carries one of those — `RetryingMetaStoreClient` and HMS flatten
+    * the transport failure into a `MetaException` or `TException`
+    * message as often as they chain it. A pooled client whose server
+    * closed its socket fails this way, and a reconnect recovers it. */
+  def isConnectionError(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(32).exists {
+      case _: TTransportException | _: java.net.SocketException => true
+      case t: org.apache.thrift.TException =>
+        Option(t.getMessage).exists(m =>
+          m.contains(classOf[TTransportException].getName) ||
+            m.contains(classOf[java.net.SocketException].getName))
+      case _ => false
+    }
 }

@@ -84,6 +84,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           Identifier.of(id.parent.levels.toArray, id.name))
     }
 
+  /** Run a namespace or table DDL, then bump the route-discovery epoch
+    * ([[graft.plans.IndexRoute.catalogsChanged]]) so every session walks
+    * its catalogs again on its next optimization. It bumps on failure
+    * too: a failed DDL may have applied part of its change. */
+  private def ddl[T](f: => T): T =
+    try f finally graft.plans.IndexRoute.catalogsChanged()
+
   // ---- SupportsNamespaces ----
 
   override def listNamespaces(): Array[Array[String]] =
@@ -102,15 +109,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     mapped(backend.describeNamespace(oid(namespace)).asJava)
 
   override def createNamespace(namespace: Array[String],
-      metadata: util.Map[String, String]): Unit = mapped {
+      metadata: util.Map[String, String]): Unit = ddl(mapped {
     // Spark's CREATE NAMESPACE IF NOT EXISTS checks existence first, so the
     // plain Create mode is correct here; exist_ok/overwrite stay reachable
     // through the backend API for spec parity (`Hive2Namespace.java:406-450`).
     backend.createNamespace(oid(namespace), metadata.asScala.toMap, CreateMode.Create)
-  }
+  })
 
   override def alterNamespace(namespace: Array[String],
-      changes: NamespaceChange*): Unit = mapped {
+      changes: NamespaceChange*): Unit = ddl(mapped {
     val updates = changes.collect {
       case set: NamespaceChange.SetProperty => set.property() -> set.value()
     }.toMap
@@ -118,16 +125,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case rm: NamespaceChange.RemoveProperty => rm.property()
     }.toSet
     backend.updateNamespaceProperties(oid(namespace), updates, removals)
-  }
+  })
 
   override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean =
-    mapped {
+    ddl(mapped {
       // Restrict-only, like every reference backend (`Hive2Namespace.java:210-212`).
       if (cascade)
         throw GraftError.Unsupported("DROP NAMESPACE ... CASCADE (restrict-only)")
       backend.dropNamespace(oid(namespace), DropMode.Fail)
       true
-    }
+    })
 
   // ---- TableCatalog ----
 
@@ -158,7 +165,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   override def createTable(ident: Identifier, schema: StructType,
-      partitions: Array[Transform], properties: util.Map[String, String]): Table = mapped {
+      partitions: Array[Transform], properties: util.Map[String, String]): Table = ddl(mapped {
     // IDENTITY transforms only: they map 1:1 onto hive-style
     // `col=value/` directory layouts under the location, which is the
     // partition story a 100 TB parquet lakehouse table actually has
@@ -189,25 +196,26 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     invalidateCached(info.id, info.location)
     new GraftTable(ident, info, schemaJson.map(_ => schema), spark,
       onCommit = () => invalidateCached(info.id, info.location))
-  }
+  })
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table =
     throw GraftError.Unsupported("ALTER TABLE (no schema evolution in reference scope)")
 
   /** Deregister: catalog entry removed, data kept — the REST backends' only
     * drop flavor (`IcebergNamespace.java:465-512`). */
-  override def dropTable(ident: Identifier): Boolean =
+  override def dropTable(ident: Identifier): Boolean = ddl {
     try {
       val info = backend.dropTable(oid(ident), purge = false)
       invalidateCached(info.id, info.location)
       true
     }
     catch { case _: GraftError.TableNotFound => false }
+  }
 
   /** dropTable-with-data (`Hive2Namespace.java:589-593`): best-effort data
     * delete after the catalog entry is gone, like `safeDropDataset`
     * (`GlueNamespace.java:668-674`). */
-  override def purgeTable(ident: Identifier): Boolean = {
+  override def purgeTable(ident: Identifier): Boolean = ddl {
     val removed = try Some(backend.dropTable(oid(ident), purge = true))
                   catch { case _: GraftError.TableNotFound => None }
     removed match {

@@ -101,8 +101,12 @@ object GraftProcedures {
     override def parameters(): Array[ProcedureParameter] = params
     override def isDeterministic: Boolean = false
     protected def run(input: InternalRow): Seq[Seq[Any]]
+    /** Every procedure may move what route discovery would find, so the
+      * next optimization of every session walks the catalogs again
+      * ([[graft.plans.IndexRoute.catalogsChanged]]). */
     override def call(input: InternalRow): java.util.Iterator[Scan] =
-      localScan(out, run(input))
+      try localScan(out, run(input))
+      finally graft.plans.IndexRoute.catalogsChanged()
   }
 
   private val receiptSchema = StructType(Seq(
@@ -159,9 +163,9 @@ object GraftProcedures {
       val built = buildIndex(indexType, source, idCol, keyCols,
         location, buckets)
       AnnIndex.registerIndexTable(spark, name, location)
-      // an index created MID-SESSION serves immediately: catalog-driven
-      // route discovery is once-per-session, so without this a CALL
-      // create_index would not route until a new session (VERDICT r15).
+      // register the route directly as well: catalog discovery walks
+      // again after this CALL, but only when it is on and `name` lives in
+      // a graft catalog of this session, and this serves either way.
       // Exact families only (registerFromManifest never auto-routes the
       // approximate vector tiers); Try-guarded — a registration problem
       // must not fail the DDL that built the index.

@@ -58,9 +58,20 @@ class GraftTable(
   private def isIndexPointer: Boolean =
     info.properties.contains("graft.index.type")
 
-  private lazy val delegate: ParquetTable =
+  private def parquetTable(schema: Option[StructType]): ParquetTable =
     ParquetTable(ident.toString, spark, scanOptions, Seq(info.location),
-      declaredSchema, classOf[ParquetFileFormat])
+      schema, classOf[ParquetFileFormat])
+
+  /** `loadTable` builds a new table per query, so an undeclared schema is
+    * taken from the metadata memo ([[graft.ops.IndexFs.memoized]]: keyed
+    * by the location's listing under the table's storage options) — a
+    * warm analysis launches no inference job, and files replaced by a
+    * wider write list differently and are inferred afresh. */
+  private lazy val delegate: ParquetTable =
+    parquetTable(declaredSchema.orElse(
+      if (isIndexPointer || !materialized) None
+      else Some(graft.ops.IndexFs.memoized(spark, info.location,
+        "table-schema", info.storageOptions)(parquetTable(None).schema))))
 
   override def name(): String = ident.toString
 

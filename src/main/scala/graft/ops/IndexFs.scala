@@ -4,7 +4,8 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Hadoop-`FileSystem` control plane for the persisted index family.
   *
@@ -46,6 +47,22 @@ import org.apache.spark.sql.SparkSession
   *
   * All calls are driver-side and metadata-sized (stat, list, one small
   * properties file); the corpus-sized bytes always move through Spark.
+  *
+  * == Metadata memo ==
+  * Planning reads the same index and table metadata on every query: a
+  * directory's parquet schema (inferring it is one Spark job) and small
+  * collected frames such as a btree zonemap's per-bucket envelope.
+  * [[memoized]] keeps such values keyed by
+  *  - the directory's qualified path and what was computed from it;
+  *  - a digest of its recursive `(relative name, size, mtime)` listing
+  *    ([[listingDigest]]). Spark part-file names carry the writing job's
+  *    UUID, so a rebuilt index, an append or a rewritten table always
+  *    lists differently and misses the memo;
+  *  - the session settings that change parquet inference
+  *    (`spark.sql.*parquet*`, `partitionColumnTypeInference`,
+  *    `caseSensitive`) and the caller's read options.
+  * A hit costs one recursive `listStatus` walk and launches no job. The
+  * memo holds at most 1024 entries and clears itself past that.
   */
 object IndexFs {
 
@@ -62,9 +79,10 @@ object IndexFs {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
-  def resolve(location: String): (FileSystem, Path) = {
+  def resolve(location: String,
+      conf: => Configuration = hadoopConf): (FileSystem, Path) = {
     val p = new Path(location)
-    val fs = p.getFileSystem(hadoopConf) match {
+    val fs = p.getFileSystem(conf) match {
       // unwrap the client-side-checksum decorator (file:// et al): the
       // control plane must not scatter `.crc` sidecars through index
       // trees, must list the same entries a plain directory stat sees
@@ -124,6 +142,82 @@ object IndexFs {
         .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
     else Seq((st.getPath.getName, st.getLen, st.getModificationTime))
   }
+
+  private val MemoLimit = 1024
+
+  private final case class MemoKey(path: String, what: String,
+      listing: String, settings: Map[String, String])
+
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[MemoKey, AnyRef]()
+
+  /** MD5 of the sorted `path:size:mtime` lines of every entry under a
+    * file or directory (paths relative to `p`); None when absent. Built
+    * by `listStatus` recursion like [[listNamesSizes]]:
+    * `FileSystem.listFiles` hands back `LocatedFileStatus`es, whose
+    * construction on the raw local FS loads permissions by shelling out
+    * once per file. */
+  private def listingDigest(fs: FileSystem, p: Path): Option[String] = {
+    def walk(dir: Path, prefix: String): Seq[String] =
+      fs.listStatus(dir).toSeq.flatMap { s =>
+        val name = prefix + s.getPath.getName
+        s"$name:${s.getLen}:${s.getModificationTime}" +:
+          (if (s.isDirectory) walk(s.getPath, name + "/") else Seq.empty)
+      }
+    try {
+      val st = fs.getFileStatus(p)
+      val lines =
+        if (st.isDirectory) walk(p, "").sorted
+        else Seq(s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      val md = java.security.MessageDigest.getInstance("MD5")
+      md.update(lines.mkString("\n").getBytes("UTF-8"))
+      Some(md.digest().map("%02x".format(_)).mkString)
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** The session settings that change what parquet inference returns. */
+  private def inferenceSettings(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.") && (k.contains("parquet") ||
+        k.contains("partitionColumnTypeInference") ||
+        k == "spark.sql.caseSensitive")
+    }
+
+  /** `compute`'s value for the file or directory at `location`, memoized
+    * under the key described on this object: path, `what`, recursive
+    * listing, inference settings and `options` (also applied to the
+    * listing's Hadoop conf, as a table's storage options are). An absent
+    * location is computed and not kept. */
+  def memoized[T <: AnyRef](spark: SparkSession, location: String,
+      what: String, options: Map[String, String] = Map.empty)
+      (compute: => T): T = {
+    val (fs, p) = resolve(location,
+      spark.sessionState.newHadoopConfWithOptions(options))
+    listingDigest(fs, p) match {
+      case None => compute
+      case Some(listing) =>
+        val key = MemoKey(fs.makeQualified(p).toString, what, listing,
+          inferenceSettings(spark) ++
+            options.map { case (k, v) => s"option.$k" -> v })
+        memo.get(key) match {
+          case null =>
+            val v = compute
+            if (memo.size >= MemoLimit) memo.clear()
+            memo.put(key, v)
+            v
+          case hit => hit.asInstanceOf[T]
+        }
+    }
+  }
+
+  /** The schema `spark.read.parquet(dir)` infers, memoized. */
+  def parquetSchema(spark: SparkSession, dir: String): StructType =
+    memoized(spark, dir, "parquet-schema")(spark.read.parquet(dir).schema)
+
+  /** `spark.read.parquet(dir)` over the memoized schema: no inference job
+    * while the directory lists the same. */
+  def readParquet(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, dir)).parquet(dir)
 
   /** Every non-hidden data file under a file or directory tree, as URI
     * strings — the filestats append-delta diff input. Driver-bounded at

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, NumericType, StringType}
 
@@ -90,7 +90,7 @@ object ScalarIndex {
   private def antiTombstones(rows: DataFrame, location: String): DataFrame =
     if (!hasTombstones(location)) rows
     else rows.join(
-      broadcast(rows.sparkSession.read.parquet(tombstoneDir(location))
+      broadcast(IndexFs.readParquet(rows.sparkSession, tombstoneDir(location))
         .select(col("id")).distinct()),
       Seq("id"), "left_anti")
 
@@ -111,6 +111,33 @@ object ScalarIndex {
     }
     AnnIndex.deleteRecursively(retired)
   }
+
+  /** The live postings over their memoized schema. */
+  private def postingsOf(spark: SparkSession, location: String): DataFrame =
+    IndexFs.readParquet(spark, s"$location/postings")
+
+  /** The btree zonemap aggregated per bucket: `(bkt, lo, hi, n)` rows,
+    * ≤ nBuckets, the only driver-side collect of a search. Memoized by
+    * the zonemap's listing ([[IndexFs.memoized]]): appends add files and
+    * rebuilds or compactions replace them, so a warm planning reuses the
+    * rows without a job and a changed index recomputes them. */
+  private def zonemapBuckets(spark: SparkSession, location: String)
+      : Array[Row] = {
+    val dir = s"$location/zonemap"
+    IndexFs.memoized(spark, dir, "zonemap-buckets") {
+      IndexFs.readParquet(spark, dir).groupBy(col("bkt"))
+        .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"),
+          sum(col("n_rows")).as("n"))
+        .select(col("bkt"), col("lo"), col("hi"), col("n"))
+        .collect()
+    }
+  }
+
+  /** The zonemap's bound type: a numeric DOUBLE shadow, or the native
+    * date/timestamp/string key. */
+  private def zonemapKeyType(spark: SparkSession, location: String)
+      : DataType =
+    IndexFs.parquetSchema(spark, s"$location/zonemap")("lo").dataType
 
   // ---- BTREE: build ----------------------------------------------------
 
@@ -482,14 +509,10 @@ object ScalarIndex {
     val man = AnnIndex.readManifest(location).getOrElse(
       throw new IllegalStateException(s"no index at $location"))
     require(man.indexType == "btree", s"not a btree index: $location")
-    require(numericKey(
-        spark.read.parquet(s"$location/zonemap").schema("lo").dataType),
+    require(numericKey(zonemapKeyType(spark, location)),
       s"btree at $location has NATIVE (${man.keyType}) keys — " +
         "use searchBtreeRangeTyped")
-    val zm = spark.read.parquet(s"$location/zonemap")
-      .groupBy(col("bkt"))
-      .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"))
-      .collect()
+    val zm = zonemapBuckets(spark, location)
     // prune with 1-ulp slack on the bucket bounds: the zonemap stores a
     // DOUBLE shadow of the native key, and for integral keys beyond 2^53
     // the cast rounds to nearest — without slack a bucket whose true lo
@@ -499,7 +522,7 @@ object ScalarIndex {
     val bkts = zm.filter(r => Math.nextDown(r.getDouble(1)) <= hi &&
         Math.nextUp(r.getDouble(2)) >= lo)
       .map(_.getInt(0)).sorted
-    val postings = spark.read.parquet(s"$location/postings")
+    val postings = postingsOf(spark, location)
     val pruned =
       if (bkts.isEmpty) postings.filter(lit(false))
       else postings.filter(col("bkt").isin(bkts.map(Int.box): _*))
@@ -565,18 +588,15 @@ object ScalarIndex {
     require(man.indexType == "btree", s"not a btree index: $location")
     require(lo != null || hi != null,
       "searchBtreeRangeTyped: at least one bound required")
-    val zmDf = spark.read.parquet(s"$location/zonemap")
-    require(!numericKey(zmDf.schema("lo").dataType),
+    require(!numericKey(zonemapKeyType(spark, location)),
       s"btree at $location has a numeric double-shadow zonemap — " +
         "use searchBtreeRange")
-    val zm = zmDf.groupBy(col("bkt"))
-      .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"))
-      .collect()
+    val zm = zonemapBuckets(spark, location)
     val bkts = zm.filter(r =>
         (hi == null || nativeCmp(r.get(1), hi) <= 0) &&
         (lo == null || nativeCmp(r.get(2), lo) >= 0))
       .map(_.getInt(0)).sorted
-    val postings = spark.read.parquet(s"$location/postings")
+    val postings = postingsOf(spark, location)
     val pruned =
       if (bkts.isEmpty) postings.filter(lit(false))
       else postings.filter(col("bkt").isin(bkts.map(Int.box): _*))
@@ -610,13 +630,10 @@ object ScalarIndex {
     val man = AnnIndex.readManifest(location).getOrElse(
       throw new IllegalStateException(s"no index at $location"))
     require(man.indexType == "btree", s"not a btree index: $location")
-    val zmDf = spark.read.parquet(s"$location/zonemap")
-    require(zmDf.schema("lo").dataType == StringType,
+    require(zonemapKeyType(spark, location) == StringType,
       s"btree at $location is not string-keyed (${man.keyType}) — " +
         "prefix search needs the native string zonemap")
-    val zm = zmDf.groupBy(col("bkt"))
-      .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"))
-      .collect()
+    val zm = zonemapBuckets(spark, location)
     val p = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     def byteCmp(x: Array[Byte], y: Array[Byte]): Int = {
       var i = 0
@@ -635,7 +652,7 @@ object ScalarIndex {
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
       byteCmp(hi, p) >= 0 && byteCmp(lo.take(p.length), p) <= 0
     }.map(_.getInt(0)).sorted
-    val postings = spark.read.parquet(s"$location/postings")
+    val postings = postingsOf(spark, location)
     val pruned =
       if (bkts.isEmpty) postings.filter(lit(false))
       else postings.filter(col("bkt").isin(bkts.map(Int.box): _*))
@@ -662,21 +679,17 @@ object ScalarIndex {
     val man = AnnIndex.readManifest(location).getOrElse(
       throw new IllegalStateException(s"no index at $location"))
     require(man.indexType == "btree", s"not a btree index: $location")
-    val zmDf = spark.read.parquet(s"$location/zonemap")
     // double-shadow zonemaps prune with 1-ulp slack; NATIVE zonemaps
     // (date/timestamp/string) compare exactly with the values' own
     // ordering — [[nativeCmp]], so string walks use the zonemap's own
     // UTF-8 byte order, not JVM UTF-16 order
-    val shadowed = numericKey(zmDf.schema("lo").dataType)
+    val shadowed = numericKey(zonemapKeyType(spark, location))
     def cmp(a: Any, b: Any): Int = nativeCmp(a, b)
     def down(v: Any): Any =
       if (shadowed) Math.nextDown(v.asInstanceOf[Double]) else v
     def up(v: Any): Any =
       if (shadowed) Math.nextUp(v.asInstanceOf[Double]) else v
-    val zm = zmDf.groupBy(col("bkt"))
-      .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"),
-        sum(col("n_rows")).as("n"))
-      .collect()
+    val zm = zonemapBuckets(spark, location)
       .map(r => (r.getInt(0), r.get(1), r.get(2), r.getLong(3)))
     if (zm.map(_._4).sum < k) None
     else if (hasTombstones(location))
@@ -686,7 +699,7 @@ object ScalarIndex {
       // (the optimizer route declines tombstoned indexes anyway; this
       // keeps the direct API exact too)
       Some(antiTombstones(
-        spark.read.parquet(s"$location/postings"), location)
+        postingsOf(spark, location), location)
         .select(col("id"), col("key")))
     else {
       val ordered =
@@ -707,7 +720,7 @@ object ScalarIndex {
           zm.filter(b => cmp(up(b._3), t) >= 0).map(_._1)
         }
       Some(antiTombstones(
-        spark.read.parquet(s"$location/postings")
+        postingsOf(spark, location)
           .filter(col("bkt").isin(bkts.sorted.map(Int.box): _*)),
         location)
         .select(col("id"), col("key")))
@@ -747,15 +760,10 @@ object ScalarIndex {
       s"btree at $location carries tombstones — zonemap counts would " +
         "include deleted rows; compact first (the optimizer route " +
         "declines instead of calling this)")
-    val zmRaw = spark.read.parquet(s"$location/zonemap")
-    require(numericKey(zmRaw.schema("lo").dataType),
+    require(numericKey(zonemapKeyType(spark, location)),
       s"btree at $location has NATIVE (${man.keyType}) keys — " +
         "count-range serves the double-shadow tier only")
-    val zm = zmRaw.groupBy(col("bkt"))
-      .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"),
-        sum(col("n_rows")).as("n"))
-      .select(col("bkt"), col("lo"), col("hi"), col("n"))
-      .collect()
+    val zm = zonemapBuckets(spark, location)
     val overlapping = zm.filter(r => Math.nextDown(r.getDouble(1)) <= hi &&
       Math.nextUp(r.getDouble(2)) >= lo)
     def inside(zlo: Double, zhi: Double): Boolean =
@@ -767,7 +775,7 @@ object ScalarIndex {
     if (edges.isEmpty)
       spark.range(1).select(lit(interiorN).as("cnt"))
     else {
-      val pruned = spark.read.parquet(s"$location/postings")
+      val pruned = postingsOf(spark, location)
         .filter(col("bkt").isin(edges.map(r => Int.box(r.getInt(0))): _*))
       val loPred =
         if (lo == Double.NegativeInfinity) lit(true)
@@ -803,14 +811,10 @@ object ScalarIndex {
       s"btree at $location carries tombstones — zonemap counts would " +
         "include deleted rows; compact first (the optimizer route " +
         "declines instead of calling this)")
-    val zmRaw = spark.read.parquet(s"$location/zonemap")
-    require(!numericKey(zmRaw.schema("lo").dataType),
+    require(!numericKey(zonemapKeyType(spark, location)),
       s"btree at $location has a numeric double-shadow zonemap — " +
         "use btreeCountRange")
-    val zm = zmRaw.groupBy(col("bkt"))
-      .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"),
-        sum(col("n_rows")).as("n"))
-      .collect()
+    val zm = zonemapBuckets(spark, location)
     val overlapping = zm.filter(r =>
       (hi == null || nativeCmp(r.get(1), hi) <= 0) &&
       (lo == null || nativeCmp(r.get(2), lo) >= 0))
@@ -827,7 +831,7 @@ object ScalarIndex {
     if (edges.isEmpty)
       spark.range(1).select(lit(interiorN).as("cnt"))
     else {
-      val pruned = spark.read.parquet(s"$location/postings")
+      val pruned = postingsOf(spark, location)
         .filter(col("bkt").isin(edges.map(r => Int.box(r.getInt(0))): _*))
       val loPred =
         if (lo == null) lit(true)
@@ -862,14 +866,10 @@ object ScalarIndex {
       s"btree at $location carries tombstones — zonemap stats would " +
         "include deleted rows; compact first (the optimizer route " +
         "declines instead of calling this)")
-    val zmRaw = spark.read.parquet(s"$location/zonemap")
-    require(numericKey(zmRaw.schema("lo").dataType),
+    require(numericKey(zonemapKeyType(spark, location)),
       s"btree at $location has NATIVE (${man.keyType}) keys — " +
         "stats-range serves the double-shadow tier only")
-    val zm = zmRaw.groupBy(col("bkt"))
-      .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"),
-        sum(col("n_rows")).as("n"))
-      .collect()
+    val zm = zonemapBuckets(spark, location)
     val overlapping = zm.filter(r => Math.nextDown(r.getDouble(1)) <= hi &&
       Math.nextUp(r.getDouble(2)) >= lo)
     def inside(zlo: Double, zhi: Double): Boolean =
@@ -886,7 +886,7 @@ object ScalarIndex {
       spark.range(1).select(litK(iMin).as("mn"), litK(iMax).as("mx"),
         lit(interiorN).as("cnt"))
     else {
-      val pruned = spark.read.parquet(s"$location/postings")
+      val pruned = postingsOf(spark, location)
         .filter(col("bkt").isin(edges.map(r => Int.box(r.getInt(0))): _*))
       val loPred =
         if (lo == Double.NegativeInfinity) lit(true)
@@ -919,14 +919,10 @@ object ScalarIndex {
       s"btree at $location carries tombstones — zonemap stats would " +
         "include deleted rows; compact first (the optimizer route " +
         "declines instead of calling this)")
-    val zmRaw = spark.read.parquet(s"$location/zonemap")
-    require(!numericKey(zmRaw.schema("lo").dataType),
+    require(!numericKey(zonemapKeyType(spark, location)),
       s"btree at $location has a numeric double-shadow zonemap — " +
         "use btreeStatsRange")
-    val zm = zmRaw.groupBy(col("bkt"))
-      .agg(min(col("lo")).as("lo"), max(col("hi")).as("hi"),
-        sum(col("n_rows")).as("n"))
-      .collect()
+    val zm = zonemapBuckets(spark, location)
     val overlapping = zm.filter(r =>
       (hi == null || nativeCmp(r.get(1), hi) <= 0) &&
       (lo == null || nativeCmp(r.get(2), lo) >= 0))
@@ -949,7 +945,7 @@ object ScalarIndex {
       spark.range(1).select(litK(iMin).as("mn"), litK(iMax).as("mx"),
         lit(interiorN).as("cnt"))
     else {
-      val pruned = spark.read.parquet(s"$location/postings")
+      val pruned = postingsOf(spark, location)
         .filter(col("bkt").isin(edges.map(r => Int.box(r.getInt(0))): _*))
       val loPred =
         if (lo == null) lit(true)
@@ -984,7 +980,7 @@ object ScalarIndex {
       s"btree at $location carries tombstones — a deleted row may have " +
         "been the min/max; compact first (the optimizer route declines " +
         "instead of calling this)")
-    spark.read.parquet(s"$location/zonemap")
+    IndexFs.readParquet(spark, s"$location/zonemap")
       .agg(min(col("lo")).cast(man.keyType).as("mn"),
         max(col("hi")).cast(man.keyType).as("mx"),
         coalesce(sum(col("n_rows")), lit(0L)).as("cnt"))
@@ -1006,7 +1002,7 @@ object ScalarIndex {
       s"bitmap at $location carries tombstones — value counts would " +
         "include deleted rows; compact first (the optimizer route " +
         "declines instead of calling this)")
-    spark.read.parquet(s"$location/values")
+    IndexFs.readParquet(spark, s"$location/values")
       .groupBy(col("k"))
       .agg(sum(col("n_rows")).cast("long").as("cnt"))
   }
@@ -1027,7 +1023,7 @@ object ScalarIndex {
       s"bitmap at $location carries tombstones — value counts would " +
         "include deleted rows; compact first (the optimizer route " +
         "declines instead of calling this)")
-    spark.read.parquet(s"$location/values")
+    IndexFs.readParquet(spark, s"$location/values")
       .filter(col("k").isInCollection(values))
       .agg(coalesce(sum(col("n_rows")), lit(0L)).cast("long").as("cnt"))
   }
@@ -1036,37 +1032,24 @@ object ScalarIndex {
     * bitmap values table's delta counts (a metadata-sized driver read).
     * Equal to the manifest's `sourceRows` exactly when the source had
     * no null/empty keys — the reconciliation the metadata-served
-    * count(*)/GROUP-BY routes require. */
-  /** [[indexedRowSum]] memoized by (location, manifest fingerprint) — the
-    * sum is immutable for a given index state (appends re-stamp the
-    * fingerprint, rebuilds replace the manifest), so the reconciliation
-    * the metadata-served aggregate routes run on EVERY planning of a
-    * count(*)/GROUP BY becomes a map lookup after the first (ADVICE r15:
-    * the uncached sum launched a distributed read inside the optimizer
-    * per planning, multiplied across routes). Bounded: the cache holds
-    * one entry per live index state and clears itself past 1024. */
-  private val rowSumCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
-
-  def indexedRowSumCached(spark: SparkSession, location: String,
-      fingerprint: String): Long = {
-    if (rowSumCache.size > 1024) rowSumCache.clear()
-    rowSumCache.computeIfAbsent((location, fingerprint),
-      _ => indexedRowSum(spark, location))
-  }
-
+    * count(*)/GROUP-BY routes run on every planning. Memoized by the
+    * counted directory's listing ([[IndexFs.memoized]]), so a warm
+    * planning pays a listing, not a distributed read. */
   def indexedRowSum(spark: SparkSession, location: String): Long = {
     val man = AnnIndex.readManifest(location).getOrElse(
       throw new IllegalStateException(s"no index at $location"))
-    val (sub, cntCol) = man.indexType match {
-      case "btree" => ("zonemap", "n_rows")
-      case "bitmap" | "label_list" => ("values", "n_rows")
+    man.indexType match {
+      case "btree" => zonemapBuckets(spark, location).map(_.getLong(3)).sum
+      case "bitmap" | "label_list" =>
+        val dir = s"$location/values"
+        IndexFs.memoized[java.lang.Long](spark, dir, "row-sum") {
+          IndexFs.readParquet(spark, dir)
+            .agg(coalesce(sum(col("n_rows")), lit(0L)).cast("long"))
+            .head().getLong(0)
+        }.longValue
       case t => throw new IllegalArgumentException(
         s"indexedRowSum: no row accounting for index type '$t'")
     }
-    spark.read.parquet(s"$location/$sub")
-      .agg(coalesce(sum(col(cntCol)), lit(0L)).cast("long"))
-      .head().getLong(0)
   }
 
   /** Fold a SOURCE-side pure-DELETE mutation into a btree/bitmap index
